@@ -250,7 +250,13 @@ def q16_bloom_dedup(spark, sf):
     # persist: dedup_new inspects shard metadata then collects the bits —
     # without caching the shard build would run twice
     shards = bloom.build_shards(seen, n_shards=8, n_bits=1 << 16).persist()
-    return bloom.dedup_new(cand, seen, shards, n_shards=8)
+    # one-shot owner: the eager checkpoint is the routed plan's only
+    # action, so the shard cache, the flagged cache and the probe
+    # broadcast are all released before the result is returned
+    owned = [shards]
+    out = bloom.dedup_new(cand, seen, shards, n_shards=8, owned=owned).localCheckpoint()
+    bloom.release(owned)
+    return out
 
 
 def q17_span_assembly(spark, sf):

@@ -10,6 +10,16 @@ go through the exact ``left_anti`` join (Bloom false positives therefore
 cost a join lookup, never a wrong answer — SURVEY §7.3 "Bloom ∧
 exactness").
 
+Probe once: the routed plan reads the probe's output through two
+branches (definite-new, maybe-seen), and Spark re-evaluates a shared
+non-exchange subtree once per consumer. ``route_new`` therefore persists
+the flagged frame, so the probe UDF (and every gate upstream of it) runs
+in exactly one plan node. The cached frame and the probe's
+``sc.broadcast`` handle belong to the caller: callers that pass an
+``owned`` list receive both and call ``release(owned)`` after their last
+action; callers that pass none get an uncached plan, and their broadcast
+is left to Spark's ContextCleaner.
+
 Scale design: shard_id = h1(url) % n_shards. Probing is a **cogrouped
 applyInPandas** on shard_id, so candidate partitions meet only their own
 shard's bits — no broadcast of the full filter (at 10^10 URLs the filter
@@ -25,10 +35,11 @@ dependence).
 from __future__ import annotations
 
 import hashlib
-import weakref
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -160,92 +171,92 @@ def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
     return candidates.join(flags, on=url_col, how="left").fillna({"maybe_seen": True})
 
 
-BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship in the UDF closure
-
-# Weak registry of the sc.broadcast handles minted by probe_broadcast
-# (bloom AND cuckoo arms). Weakrefs only: one-shot callers (q16, tests)
-# keep the normal lifecycle — handle dies with its plan, ContextCleaner
-# reclaims it after a JVM GC. The crawl loop, whose windows mint one
-# broadcast each, drains the registry per window and destroys the
-# previous window's entries deterministically once wait_commit + the
-# checkpoint materialization invariants guarantee no live plan can
-# re-evaluate them — instead of letting shard bytes for up to 8 windows
-# accrete between the loop's periodic GCs.
-_LIVE_PROBE_BROADCASTS: list = []
+BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship as an sc.broadcast
 
 
-def _track_broadcast(bc) -> None:
-    _LIVE_PROBE_BROADCASTS.append(weakref.ref(bc))
+def release(owned: list) -> None:
+    """Free what an owner holds — a probe's persisted flagged frame and
+    broadcast handle, or any other cached frame: unpersist frames and
+    destroy broadcasts (executor blocks AND the driver copy go now, not at
+    the next JVM GC). Each handle is released once."""
+    for x in owned:
+        if isinstance(x, Broadcast):
+            x.destroy()
+        else:
+            x.unpersist()
+
+
+# The two names below are kept for callers written against the removed
+# module-level broadcast registry (the crawl benchmark's bloom probe):
+# probes now hand their broadcast to an explicit owner instead.
+
+def destroy_broadcasts(handles: list) -> None:
+    """Destroy broadcast handles now (``release`` of a handle list)."""
+    release(handles)
 
 
 def drain_probe_broadcasts() -> list:
-    """Hand the tracked broadcast weakrefs to the caller and reset the
-    registry. The caller owns deciding when destroy_broadcasts is safe."""
-    out = _LIVE_PROBE_BROADCASTS[:]
-    _LIVE_PROBE_BROADCASTS.clear()
-    return out
-
-
-def destroy_broadcasts(refs: list) -> None:
-    """Destroy still-live broadcast handles (frees executor blocks AND
-    the driver copy now, not at the next periodic GC). Dead refs mean the
-    ContextCleaner already has the handle; errors mean the context is
-    shutting down — both are fine to skip."""
-    for ref in refs:
-        bc = ref()
-        if bc is None:
-            continue
-        try:
-            bc.destroy()
-        except Exception:
-            pass
+    """Always empty: no module-level registry holds probe broadcasts."""
+    return []
 
 
 def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
-                    url_col: str = "url_canon") -> DataFrame:
+                    url_col: str = "url_canon", owned: list | None = None) -> DataFrame:
     """Small-filter probe as a scalar pandas UDF (fuses into the existing
     stage — zero extra shuffles). The shard bits travel as an explicit
     ``sc.broadcast`` — NOT in the UDF closure: closure bytes are
     re-serialized into every task (the crawl profile showed 1 MiB tasks
     on every stage touching the probe, with the driver paying that
     serialization serially), while a broadcast ships once per executor
-    and is cached by the python workers across tasks. The cogrouped
+    and is cached by the python workers across tasks. The handle is
+    appended to ``owned`` when given (see ``release``). The cogrouped
     ``probe`` is the big-filter path; same bit semantics. ``n_shards`` is
     the CONFIGURED shard count (routing modulus) — the committed rows may
-    cover fewer shards (empty shards are absent)."""
+    cover fewer shards (empty shards are absent).
+
+    Kernel: the driver concatenates the shard bitsets into one flat
+    array with a per-shard byte-offset table (-1 for shards with no
+    committed bits, whose urls are definitely new), so a batch costs k
+    gathers instead of k × n_shards masked passes; the iterator UDF form
+    decodes the broadcast once per task, not once per batch."""
     from pyspark.sql.functions import pandas_udf
 
+    rows = sorted((r for r in shard_rows if int(r["shard_id"]) < n_shards),
+                  key=lambda r: int(r["shard_id"]))
+    offsets = np.full(n_shards, -1, dtype=np.int64)
+    offsets[[int(r["shard_id"]) for r in rows]] = \
+        np.arange(len(rows), dtype=np.int64) * (int(shard_rows[0]["n_bits"]) // 8)
     # resolve the context from the DataFrame itself: getActiveSession()
     # returns None off the main thread (e.g. a plan built from the async
     # commit thread) — the argument already carries its session
     sc = candidates.sparkSession.sparkContext
     bc = sc.broadcast({
-        "bits": {int(r["shard_id"]): bytes(r["bits"]) for r in shard_rows},
+        "flat": b"".join(bytes(r["bits"]) for r in rows),
+        "offsets": offsets,
         "n_bits": int(shard_rows[0]["n_bits"]),
         "k": int(shard_rows[0]["n_hashes"]),
     })
-    _track_broadcast(bc)
+    if owned is not None:
+        owned.append(bc)
 
     @pandas_udf("boolean")
-    def bloom_maybe_seen(urls: pd.Series) -> pd.Series:
+    def bloom_maybe_seen(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         v = bc.value
-        shard_bits = {s: np.frombuffer(b, dtype=np.uint8)
-                      for s, b in v["bits"].items()}
-        n_bits = np.uint64(v["n_bits"])
-        k = v["k"]
-        h1, h2 = _h12(urls)
-        sid = h1 % np.uint64(n_shards)
-        # urls routed to a shard with no committed bits are definitely new
-        hit = np.isin(sid, np.array(list(shard_bits), dtype=np.uint64))
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % n_bits
-            byte_i = (pos >> 3).astype(np.int64)
-            mask = (1 << (pos & 7)).astype(np.uint8)
-            for s, bits in shard_bits.items():
-                m = sid == np.uint64(s)
-                if m.any():
-                    hit[m] &= (bits[byte_i[m]] & mask[m]) != 0
-        return pd.Series(hit)
+        flat = np.frombuffer(v["flat"], dtype=np.uint8)
+        offsets, n_bits, k = v["offsets"], np.uint64(v["n_bits"]), v["k"]
+        for urls in batches:
+            h1, h2 = _h12(urls)
+            base = offsets[(h1 % np.uint64(n_shards)).astype(np.int64)]
+            hit = base >= 0
+            idx = np.flatnonzero(hit)
+            h1, h2, base = h1[idx], h2[idx], base[idx]
+            ok = np.ones(len(idx), dtype=bool)
+            for i in range(k):
+                pos = (h1 + np.uint64(i) * h2) % n_bits
+                ok &= (flat[base + (pos >> 3).astype(np.int64)]
+                       & (1 << (pos & 7)).astype(np.uint8)) != 0
+            hit[idx] = ok
+            yield pd.Series(hit)
 
     return candidates.withColumn("maybe_seen", bloom_maybe_seen(F.col(url_col)))
 
@@ -278,40 +289,47 @@ def rows_df(spark, rows: list):
     )
 
 
-def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
-                   url_col: str = "url_canon",
-                   n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
-    """dedup_new for driver-held shard rows (the crawl's small-filter
-    path): no per-window first()/collect() jobs — the probe closure is
-    built directly from the rows."""
-    if not shard_rows:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
+def route_new(flagged: DataFrame, seen: DataFrame, url_col: str = "url_canon",
+              owned: list | None = None) -> DataFrame:
+    """D1 routing over a probe's output (either arm): rows with
+    ``maybe_seen`` false are definitely new and pass without a join; the
+    rest take the exact anti-join against ``seen``. Both branches read
+    ``flagged``; with an owner it is persisted (and appended to
+    ``owned``) so the probe runs once, without one the plan stays
+    uncached and each branch re-runs it."""
+    if owned is not None:
+        flagged = flagged.persist()
+        owned.append(flagged)
     definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
 
 
+def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
+                   url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS,
+                   owned: list | None = None) -> DataFrame:
+    """dedup_new for driver-held shard rows (the crawl's small-filter
+    path): no per-window first()/collect() jobs — the probe broadcast is
+    built directly from the rows."""
+    if not shard_rows:
+        return candidates.join(seen, on=url_col, how="left_anti")
+    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col, owned)
+    return route_new(flagged, seen, url_col, owned)
+
+
 def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
-              url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
+              url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS,
+              owned: list | None = None) -> DataFrame:
     """D1: rows of candidates whose URL is not in seen.
 
     With shards: bloom-negative rows pass directly (no join); only
-    bloom-positive rows pay the exact anti-join. Small filters ship via
-    the UDF closure (no routing shuffle); big filters use the cogrouped
+    bloom-positive rows pay the exact anti-join. Small filters ship as a
+    broadcast (no routing shuffle); big filters use the cogrouped
     per-shard probe. Without shards: plain left_anti.
     """
     if shards is None:
         return candidates.join(seen, on=url_col, how="left_anti")
-    shard_rows = None
     first = shards.select("n_bits").first()
     if first is not None and int(first["n_bits"]) // 8 * n_shards <= BROADCAST_SHARD_BYTES:
-        shard_rows = shards.collect()
-    if shard_rows:
-        flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
-    else:
-        flagged = probe(candidates, shards, url_col, n_shards)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    checked = maybe.join(seen, on=url_col, how="left_anti")
-    return definite_new.unionByName(checked)
+        return dedup_new_rows(candidates, seen, shards.collect(), url_col, n_shards, owned)
+    return route_new(probe(candidates, shards, url_col, n_shards), seen, url_col, owned)

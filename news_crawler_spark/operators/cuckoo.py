@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bloom import _h12, _track_broadcast, shard_id_col
+from .bloom import _h12, route_new, shard_id_col
 
 SLOTS = 4
 MIX = np.uint64(0x5BD1E995)
@@ -79,10 +79,11 @@ def _lookup(table: np.ndarray, fp: np.ndarray, i1: np.ndarray, nb: np.uint64) ->
 
 
 def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
-                    url_col: str = "url_canon") -> DataFrame:
+                    url_col: str = "url_canon", owned: list | None = None) -> DataFrame:
     """Adds ``maybe_seen``; shard tables travel as an ``sc.broadcast``
     (not UDF-closure bytes — closure bytes re-serialize into every task;
-    a broadcast ships once per executor and python workers cache it)."""
+    a broadcast ships once per executor and python workers cache it).
+    The handle is appended to ``owned`` when given (``bloom.release``)."""
     from pyspark.sql.functions import pandas_udf
 
     # session from the DataFrame, not getActiveSession() (None off-thread)
@@ -91,7 +92,8 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
         "tables": {int(r["shard_id"]): bytes(r["table"]) for r in shard_rows},
         "n_buckets": int(shard_rows[0]["n_buckets"]),
     })
-    _track_broadcast(bc)
+    if owned is not None:
+        owned.append(bc)
 
     @pandas_udf("boolean")
     def cuckoo_maybe_seen(urls: pd.Series) -> pd.Series:
@@ -240,26 +242,15 @@ def rows_df(spark, rows: list):
 
 
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
-                   url_col: str = "url_canon", n_shards: int = 32) -> DataFrame:
-    """dedup_new for driver-held shard rows (no per-window collect job)."""
+                   url_col: str = "url_canon", n_shards: int = 32,
+                   owned: list | None = None) -> DataFrame:
+    """D1 with the cuckoo arm, for driver-held shard rows (no per-window
+    collect job): same routing contract and ownership as
+    bloom.dedup_new_rows — negatives skip the exact anti-join."""
     if not shard_rows:
         return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
-
-
-def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
-              url_col: str = "url_canon", n_shards: int = 32) -> DataFrame:
-    """D1 with the cuckoo arm: same routing contract as bloom.dedup_new —
-    negatives skip the exact anti-join, positives take it."""
-    if shards is None:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shards.collect(), n_shards, url_col)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
+    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col, owned)
+    return route_new(flagged, seen, url_col, owned)
 
 
 def delete_urls(shards: DataFrame, urls: DataFrame, n_shards: int = 32) -> DataFrame:

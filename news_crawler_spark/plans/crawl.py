@@ -367,16 +367,14 @@ def run_crawl(
             seen_rows_total = seen_mem.count()  # one bounded prelude job
     res.prelude_s = time.time() - _t_prelude
     batch = max(store.last_batch_id, 0)  # fresh store: no init snapshot
-    prev_unpersist: list[DataFrame] = []
-    # filter-probe broadcasts live on the prev_unpersist lifecycle: the
-    # window's sc.broadcast handles are drained into prev_probe_bcs when
-    # the window ends and destroyed at the NEXT window's drain point —
-    # after wait_commit (their commit plans are done) and after the next
-    # window's stats actions (which materialize the lazy checkpoints whose
-    # lineage was the last reference). Stale registry entries from earlier
-    # same-session queries are discarded (not destroyed) up front.
-    bloom.drain_probe_broadcasts()
-    prev_probe_bcs: list = []
+    # a window's caches, plus what its seen-prefilter probe created (the
+    # persisted flagged frame and the sc.broadcast handle, probe_owned),
+    # are released at the NEXT window's drain point — after wait_commit
+    # (their commit plans are done) and after the next window's stats
+    # actions (which materialize the lazy checkpoints whose lineage was
+    # the last reference)
+    prev_unpersist: list = []
+    probe_owned: list = []
     # driver-side head-list twin: small fused windows maintain the top-50
     # as driver rows (LocalTable commit — no per-window head Spark job);
     # exactly one of head_rows / head_mem is live at any time
@@ -598,6 +596,10 @@ def run_crawl(
             # D1: cross-batch seen — seen rows can neither accept nor claim
             # first-occurrence, so dropping them entirely is exact. The
             # prefilter arm (bloom or cuckoo) only routes; the anti-join decides.
+            # The probe runs once per window: its flagged frame is
+            # persisted and both routing branches read that one cached
+            # set; the cache and the probe's broadcast land in probe_owned
+            # and are released after the next window's wait_commit.
             # shard state is driver-held rows (bounded by the small-filter
             # broadcast cap): no per-window collect/first jobs, no lazy
             # merge chain whose evaluation grows with window count. Past
@@ -606,10 +608,12 @@ def run_crawl(
             if seen_mem is not None:
                 if seen_filter == "cuckoo":
                     cand = cuckoo.dedup_new_rows(cand, seen_mem, shard_rows or [],
-                                                 n_shards=n_bloom_shards)
+                                                 n_shards=n_bloom_shards,
+                                                 owned=probe_owned)
                 elif seen_filter == "bloom":
                     cand = bloom.dedup_new_rows(cand, seen_mem, shard_rows or [],
-                                                n_shards=n_bloom_shards)
+                                                n_shards=n_bloom_shards,
+                                                owned=probe_owned)
                 else:
                     cand = cand.join(seen_mem, on="url_canon", how="left_anti")
 
@@ -645,13 +649,6 @@ def run_crawl(
                         "fuzzy_dedup", "d_summary", "d_img", "ts", "row_ok",
                         F.col("href").alias("original_url"))
             )
-            pregate_pre = None
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                pregate._jdf.queryExecution().executedPlan()
-                _clock("pregate_plan", t0)
-                if os.environ.get("NCS_PLAN_DEBUG"):
-                    pregate_pre = pregate
-                t0 = time.time()
             pregate = pregate.localCheckpoint(eager=False)
             _clock("pregate_materialize", t0)
 
@@ -677,10 +674,6 @@ def run_crawl(
             if retries_next is not None:
                 stats1 = stats1.unionByName(_tagged(
                     retries_next.agg(F.count("*").alias("n")), "retry", c=F.col("n")))
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                tp = time.time()
-                stats1._jdf.queryExecution().executedPlan()
-                _clock("stats1_plan", tp)
             stats1 = stats1.toPandas()
             item_counts: dict[tuple[int, int], int] = {}
             soe_rows: list[tuple[int, int, int, str]] = []
@@ -704,9 +697,6 @@ def run_crawl(
                     f"pages in window {batch}; widen window_s or lower K"
                 )
             _clock("stats1", t0)
-            if pregate_pre is not None and batch <= 1:
-                print("PREGATE_FINAL_PLAN\n"
-                      + pregate_pre._jdf.queryExecution().executedPlan().toString())
 
             # ---- driver-side stop replay (exact A6; bounded by window rows)
             t0 = time.time()
@@ -774,10 +764,6 @@ def run_crawl(
                 norm_title_e.alias("norm_title"),
                 F.col("fuzzy_dedup"),
             )
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                tp = time.time()
-                docs._jdf.queryExecution().executedPlan()
-                _clock("docs_plan", tp)
             docs = docs.localCheckpoint(eager=False)
             # LAZY checkpoint: caches like persist() AND truncates the
             # logical plan at creation (no extra job — stats2 below is
@@ -1037,10 +1023,8 @@ def run_crawl(
             # the next window's DAG builds and runs -------------------------
             t0 = time.time()
             store.wait_commit()
-            for df in prev_unpersist:
-                df.unpersist()
-            bloom.destroy_broadcasts(prev_probe_bcs)
-            prev_probe_bcs = []
+            bloom.release(prev_unpersist)
+            prev_unpersist = []
             _clock("commit_wait", t0)
             t0 = time.time()
             # size the write partitioning to the window: a K=1 window of a
@@ -1088,8 +1072,9 @@ def run_crawl(
             )
             _clock("commit_submit", t0)
 
-            prev_unpersist = [docs, pregate, items, dispatched, gated, frontier_mem]
-            prev_probe_bcs = bloom.drain_probe_broadcasts()
+            prev_unpersist = [docs, pregate, items, dispatched, gated, frontier_mem,
+                              *probe_owned]
+            probe_owned = []
             if retry_mem is not None:
                 prev_unpersist.append(retry_mem)
             if new_head is not None:  # Spark-path head window
@@ -1125,9 +1110,7 @@ def run_crawl(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
         store.wait_commit()
-        for df in prev_unpersist + seen_chain + fuzzy_chain:
-            df.unpersist()
-        bloom.destroy_broadcasts(prev_probe_bcs + bloom.drain_probe_broadcasts())
+        bloom.release(prev_unpersist + probe_owned + seen_chain + fuzzy_chain)
         if fuzzy_ckpt is not None:
             fuzzy_ckpt.unpersist()
         if frontier_mem is not None:

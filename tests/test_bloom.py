@@ -56,31 +56,34 @@ def test_shard_routing_matches_python_hash(spark):
         assert r.sid == h1 % 32
 
 
-def test_probe_broadcast_registry_lifecycle(spark):
-    # probe_broadcast registers its sc.broadcast handle as a WEAKref:
-    # the crawl loop drains the registry per window and destroys the
-    # handles once no live plan can re-evaluate them; one-shot callers
-    # never drain and must keep the normal ContextCleaner lifecycle
-    # (a weakref cannot pin the handle alive).
+def test_probe_broadcast_owner_lifecycle(spark):
+    # probe_broadcast hands its sc.broadcast handle to the caller's owned
+    # list (the crawl loop releases it after wait_commit); release must
+    # destroy a LIVE handle, and a fresh probe afterwards mints a new
+    # working broadcast (destroyed handles are never reused)
     seen = spark.createDataFrame(_urls("seen", 20), "url_canon string")
     shard_rows = bloom.build_shards(seen, n_shards=4, n_bits=1 << 12).collect()
     cand = spark.createDataFrame(_urls("seen", 20) + _urls("new", 20), "url_canon string")
 
-    bloom.drain_probe_broadcasts()  # isolate from earlier tests
-    flagged = bloom.probe_broadcast(cand, shard_rows, n_shards=4)
-    refs = bloom.drain_probe_broadcasts()
-    assert len(refs) == 1 and refs[0]() is not None  # live while the plan is
+    owned = []
+    flagged = bloom.probe_broadcast(cand, shard_rows, n_shards=4, owned=owned)
+    assert len(owned) == 1
+    bc = owned[0]
+    assert bc._jbroadcast.isValid()  # live while the plan is
     assert flagged.filter(F.col("maybe_seen")).count() >= 20
-    assert bloom.drain_probe_broadcasts() == []  # drain resets the registry
 
-    # destroy after the plan is released: probing again must mint a fresh
-    # working broadcast (destroyed handles are never reused)
     del flagged
-    bloom.destroy_broadcasts(refs)
+    bloom.release(owned)
+    assert not bc._jbroadcast.isValid()  # destroy() ran on the live handle
+
+    owned = []
     out = {r.url_canon
-           for r in bloom.dedup_new_rows(cand, seen, shard_rows, n_shards=4).collect()}
+           for r in bloom.dedup_new_rows(cand, seen, shard_rows, n_shards=4,
+                                         owned=owned).collect()}
     assert out == {u for (u,) in _urls("new", 20)}
-    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
+    # the routed plan owns one cached flagged frame and one fresh broadcast
+    assert len(owned) == 2 and owned[0] is not bc
+    bloom.release(owned)
 
 
 def test_broadcast_probe_with_empty_shards(spark):

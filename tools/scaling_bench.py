@@ -114,6 +114,9 @@ def append_history(entry: dict) -> None:
         f.write(json.dumps(entry) + "\n")
 
 
+KEEP_MARKER = "## Crawl benchmark entries"
+
+
 def render_md() -> None:
     """Regenerate BENCH/BASELINE.md from the FULL history file — newest
     protocol run up top, every prior run preserved below."""
@@ -294,6 +297,15 @@ def render_md() -> None:
         "",
     ]
     out_path = os.path.join(REPO, "BENCH", "BASELINE.md")
+    # hand-written sections from KEEP_MARKER on (crawl benchmark entries)
+    # are not derived from the history: carry them over verbatim
+    try:
+        with open(out_path) as f:
+            prev = f.read()
+        if KEEP_MARKER in prev:
+            lines.append(prev[prev.index(KEEP_MARKER):])
+    except OSError:
+        pass
     with open(out_path, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out_path}\nefficiency={eff:.2f}")
