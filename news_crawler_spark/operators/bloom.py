@@ -15,10 +15,9 @@ branches (definite-new, maybe-seen), and Spark re-evaluates a shared
 non-exchange subtree once per consumer. ``route_new`` therefore persists
 the flagged frame, so the probe UDF (and every gate upstream of it) runs
 in exactly one plan node. The cached frame and the probe's
-``sc.broadcast`` handle belong to the caller: callers that pass an
-``owned`` list receive both and call ``release(owned)`` after their last
-action; callers that pass none get an uncached plan, and their broadcast
-is left to Spark's ContextCleaner.
+``sc.broadcast`` handle belong to the caller: the routing functions
+take an ``owned`` list, append both to it, and the caller calls
+``release(owned)`` after its last action on the result.
 
 Scale design: shard_id = h1(url) % n_shards. Probing is a **cogrouped
 applyInPandas** on shard_id, so candidate partitions meet only their own
@@ -35,7 +34,6 @@ dependence).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -178,7 +176,8 @@ def release(owned: list) -> None:
     """Free what an owner holds — a probe's persisted flagged frame and
     broadcast handle, or any other cached frame: unpersist frames and
     destroy broadcasts (executor blocks AND the driver copy go now, not at
-    the next JVM GC). Each handle is released once."""
+    the next JVM GC). Hand each object over once: destroying a destroyed
+    broadcast raises."""
     for x in owned:
         if isinstance(x, Broadcast):
             x.destroy()
@@ -212,27 +211,15 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
     appended to ``owned`` when given (see ``release``). The cogrouped
     ``probe`` is the big-filter path; same bit semantics. ``n_shards`` is
     the CONFIGURED shard count (routing modulus) — the committed rows may
-    cover fewer shards (empty shards are absent).
-
-    Kernel: the driver concatenates the shard bitsets into one flat
-    array with a per-shard byte-offset table (-1 for shards with no
-    committed bits, whose urls are definitely new), so a batch costs k
-    gathers instead of k × n_shards masked passes; the iterator UDF form
-    decodes the broadcast once per task, not once per batch."""
+    cover fewer shards (empty shards are absent)."""
     from pyspark.sql.functions import pandas_udf
 
-    rows = sorted((r for r in shard_rows if int(r["shard_id"]) < n_shards),
-                  key=lambda r: int(r["shard_id"]))
-    offsets = np.full(n_shards, -1, dtype=np.int64)
-    offsets[[int(r["shard_id"]) for r in rows]] = \
-        np.arange(len(rows), dtype=np.int64) * (int(shard_rows[0]["n_bits"]) // 8)
     # resolve the context from the DataFrame itself: getActiveSession()
     # returns None off the main thread (e.g. a plan built from the async
     # commit thread) — the argument already carries its session
     sc = candidates.sparkSession.sparkContext
     bc = sc.broadcast({
-        "flat": b"".join(bytes(r["bits"]) for r in rows),
-        "offsets": offsets,
+        "bits": {int(r["shard_id"]): bytes(r["bits"]) for r in shard_rows},
         "n_bits": int(shard_rows[0]["n_bits"]),
         "k": int(shard_rows[0]["n_hashes"]),
     })
@@ -240,23 +227,25 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
         owned.append(bc)
 
     @pandas_udf("boolean")
-    def bloom_maybe_seen(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def bloom_maybe_seen(urls: pd.Series) -> pd.Series:
         v = bc.value
-        flat = np.frombuffer(v["flat"], dtype=np.uint8)
-        offsets, n_bits, k = v["offsets"], np.uint64(v["n_bits"]), v["k"]
-        for urls in batches:
-            h1, h2 = _h12(urls)
-            base = offsets[(h1 % np.uint64(n_shards)).astype(np.int64)]
-            hit = base >= 0
-            idx = np.flatnonzero(hit)
-            h1, h2, base = h1[idx], h2[idx], base[idx]
-            ok = np.ones(len(idx), dtype=bool)
-            for i in range(k):
-                pos = (h1 + np.uint64(i) * h2) % n_bits
-                ok &= (flat[base + (pos >> 3).astype(np.int64)]
-                       & (1 << (pos & 7)).astype(np.uint8)) != 0
-            hit[idx] = ok
-            yield pd.Series(hit)
+        shard_bits = {s: np.frombuffer(b, dtype=np.uint8)
+                      for s, b in v["bits"].items()}
+        n_bits = np.uint64(v["n_bits"])
+        k = v["k"]
+        h1, h2 = _h12(urls)
+        sid = h1 % np.uint64(n_shards)
+        # urls routed to a shard with no committed bits are definitely new
+        hit = np.isin(sid, np.array(list(shard_bits), dtype=np.uint64))
+        for i in range(k):
+            pos = (h1 + np.uint64(i) * h2) % n_bits
+            byte_i = (pos >> 3).astype(np.int64)
+            mask = (1 << (pos & 7)).astype(np.uint8)
+            for s, bits in shard_bits.items():
+                m = sid == np.uint64(s)
+                if m.any():
+                    hit[m] &= (bits[byte_i[m]] & mask[m]) != 0
+        return pd.Series(hit)
 
     return candidates.withColumn("maybe_seen", bloom_maybe_seen(F.col(url_col)))
 
@@ -290,16 +279,14 @@ def rows_df(spark, rows: list):
 
 
 def route_new(flagged: DataFrame, seen: DataFrame, url_col: str = "url_canon",
-              owned: list | None = None) -> DataFrame:
+              *, owned: list) -> DataFrame:
     """D1 routing over a probe's output (either arm): rows with
     ``maybe_seen`` false are definitely new and pass without a join; the
     rest take the exact anti-join against ``seen``. Both branches read
-    ``flagged``; with an owner it is persisted (and appended to
-    ``owned``) so the probe runs once, without one the plan stays
-    uncached and each branch re-runs it."""
-    if owned is not None:
-        flagged = flagged.persist()
-        owned.append(flagged)
+    ``flagged``, so it is persisted (and appended to ``owned``): the
+    probe runs once, not once per branch."""
+    flagged = flagged.persist()
+    owned.append(flagged)
     definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
@@ -307,19 +294,19 @@ def route_new(flagged: DataFrame, seen: DataFrame, url_col: str = "url_canon",
 
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
                    url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS,
-                   owned: list | None = None) -> DataFrame:
+                   *, owned: list) -> DataFrame:
     """dedup_new for driver-held shard rows (the crawl's small-filter
     path): no per-window first()/collect() jobs — the probe broadcast is
     built directly from the rows."""
     if not shard_rows:
         return candidates.join(seen, on=url_col, how="left_anti")
     flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col, owned)
-    return route_new(flagged, seen, url_col, owned)
+    return route_new(flagged, seen, url_col, owned=owned)
 
 
 def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
               url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS,
-              owned: list | None = None) -> DataFrame:
+              *, owned: list) -> DataFrame:
     """D1: rows of candidates whose URL is not in seen.
 
     With shards: bloom-negative rows pass directly (no join); only
@@ -331,5 +318,7 @@ def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
         return candidates.join(seen, on=url_col, how="left_anti")
     first = shards.select("n_bits").first()
     if first is not None and int(first["n_bits"]) // 8 * n_shards <= BROADCAST_SHARD_BYTES:
-        return dedup_new_rows(candidates, seen, shards.collect(), url_col, n_shards, owned)
-    return route_new(probe(candidates, shards, url_col, n_shards), seen, url_col, owned)
+        return dedup_new_rows(candidates, seen, shards.collect(), url_col, n_shards,
+                              owned=owned)
+    return route_new(probe(candidates, shards, url_col, n_shards), seen, url_col,
+                     owned=owned)

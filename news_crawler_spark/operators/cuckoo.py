@@ -243,14 +243,14 @@ def rows_df(spark, rows: list):
 
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
                    url_col: str = "url_canon", n_shards: int = 32,
-                   owned: list | None = None) -> DataFrame:
+                   *, owned: list) -> DataFrame:
     """D1 with the cuckoo arm, for driver-held shard rows (no per-window
     collect job): same routing contract and ownership as
     bloom.dedup_new_rows — negatives skip the exact anti-join."""
     if not shard_rows:
         return candidates.join(seen, on=url_col, how="left_anti")
     flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col, owned)
-    return route_new(flagged, seen, url_col, owned)
+    return route_new(flagged, seen, url_col, owned=owned)
 
 
 def delete_urls(shards: DataFrame, urls: DataFrame, n_shards: int = 32) -> DataFrame:

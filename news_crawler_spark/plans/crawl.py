@@ -1023,8 +1023,10 @@ def run_crawl(
             # the next window's DAG builds and runs -------------------------
             t0 = time.time()
             store.wait_commit()
-            bloom.release(prev_unpersist)
-            prev_unpersist = []
+            # take the list before releasing it: if a release raises, the
+            # finally below must not release the same objects again
+            owned, prev_unpersist = prev_unpersist, []
+            bloom.release(owned)
             _clock("commit_wait", t0)
             t0 = time.time()
             # size the write partitioning to the window: a K=1 window of a

@@ -28,7 +28,10 @@ def test_dedup_new_exact(spark):
     seen = spark.createDataFrame(_urls("seen", 300), "url_canon string")
     shards = bloom.build_shards(seen, n_shards=8, n_bits=1 << 14)
     cand = spark.createDataFrame(_urls("seen", 300) + _urls("new", 300), "url_canon string")
-    out = {r.url_canon for r in bloom.dedup_new(cand, seen, shards, n_shards=8).collect()}
+    owned = []
+    out = {r.url_canon
+           for r in bloom.dedup_new(cand, seen, shards, n_shards=8, owned=owned).collect()}
+    bloom.release(owned)
     assert out == {u for (u,) in _urls("new", 300)}
 
 
@@ -94,5 +97,8 @@ def test_broadcast_probe_with_empty_shards(spark):
     shards = bloom.build_shards(seen, n_shards=32, n_bits=1 << 12)
     assert shards.count() <= 3
     cand = spark.createDataFrame(_urls("seen", 3) + _urls("new", 50), "url_canon string")
-    out = {r.url_canon for r in bloom.dedup_new(cand, seen, shards, n_shards=32).collect()}
+    owned = []
+    out = {r.url_canon
+           for r in bloom.dedup_new(cand, seen, shards, n_shards=32, owned=owned).collect()}
+    bloom.release(owned)
     assert out == {u for (u,) in _urls("new", 50)}

@@ -105,7 +105,7 @@ def test_crawl_compaction_anti_join_is_one_bucketed_scan(spark, world, tmp_path)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = bloom.dedup_new_rows(cand, spark.table(res.seen_table), [])
+        out = bloom.dedup_new_rows(cand, spark.table(res.seen_table), [], owned=[])
         plan = _plan(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
