@@ -119,23 +119,6 @@ def rows_from_urls(
     return rows
 
 
-def merge_shards(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge shard tables (idempotent — re-merging a batch is a no-op)."""
-
-    def orit(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["bits"]:
-            a = np.frombuffer(b, dtype=np.uint8)
-            acc = a.copy() if acc is None else (acc | a)
-        r = pdf.iloc[[0]].copy()
-        r["bits"] = [acc.tobytes()]
-        r["version"] = int(pdf["version"].max())
-        return r
-
-    both = existing.unionByName(delta)
-    return both.groupBy("shard_id").applyInPandas(orit, schema=BLOOM_SCHEMA)
-
-
 def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
           n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
     """Adds ``maybe_seen`` to candidates via cogrouped per-shard probe.
@@ -269,18 +252,9 @@ def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
     return [by[k] for k in sorted(by)]
 
 
-def rows_df(spark, rows: list):
-    """Driver shard rows → DataFrame (for the snapshot commit)."""
-    return spark.createDataFrame(
-        [(int(r["shard_id"]), int(r["n_bits"]), int(r["n_hashes"]),
-          bytes(r["bits"]), int(r["version"])) for r in rows],
-        BLOOM_SCHEMA,
-    )
-
-
 def route_new(flagged: DataFrame, seen: DataFrame, url_col: str = "url_canon",
               *, owned: list) -> DataFrame:
-    """D1 routing over a probe's output (either arm): rows with
+    """D1 routing over a probe's output: rows with
     ``maybe_seen`` false are definitely new and pass without a join; the
     rest take the exact anti-join against ``seen``. Both branches read
     ``flagged``, so it is persisted (and appended to ``owned``): the

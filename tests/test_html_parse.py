@@ -171,7 +171,7 @@ def test_crawl_parity_at_reference_keyword_scale(spark, tmp_path):
         golden = run_reference_model(build_world(0.02))
         world = world_dfs(spark, 0.02)
         store = SnapshotStore(str(tmp_path / "kw_store"))
-        run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8)
+        run_crawl(spark, world, store, pages_per_batch=8)
         rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
@@ -215,15 +215,15 @@ def test_relevance_profile_fast_exact_vs_native(spark):
         assert r.n == r.f, rows[got.index(r)]
 
 
-def test_crawl_udf_relevance_path_parity(spark, world, golden, tmp_path):
+def test_crawl_udf_relevance_path_parity(spark, world, golden, tmp_path, monkeypatch):
     """Forcing the crawl through the Arrow-UDF relevance path (threshold
     0) reproduces the same parity result as the native path."""
-    from news_crawler_spark.plans.crawl import run_crawl
+    from news_crawler_spark.plans import crawl
     from news_crawler_spark.sources.store import SnapshotStore
 
+    monkeypatch.setattr(crawl, "RELEVANCE_UDF_THRESHOLD", 0)
     store = SnapshotStore(str(tmp_path / "udf_rel_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8,
-              relevance_udf_threshold=0)
+    crawl.run_crawl(spark, world, store, pages_per_batch=8)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}

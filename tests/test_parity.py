@@ -13,7 +13,7 @@ def crawl_run(spark, world, tmp_path_factory, request):
     """Parity must hold at both cadences: K=1 (the reference's
     page-at-a-time politeness cadence) and K=8 (windowed scale mode)."""
     store = SnapshotStore(str(tmp_path_factory.mktemp("store")))
-    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=request.param)
+    res = run_crawl(spark, world, store, pages_per_batch=request.param)
     return store, res
 
 
@@ -91,7 +91,7 @@ def test_parity_with_virtual_sites(spark, tmp_path):
     golden2 = run_reference_model(build_world(0.05, site_mult=2))
     world2 = world_dfs(spark, 0.05, site_mult=2)
     store = SnapshotStore(str(tmp_path / "mult_store"))
-    run_crawl(spark, world2, store, use_bloom=False, pages_per_batch=16)
+    run_crawl(spark, world2, store, pages_per_batch=16)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden2.docs.items()}

@@ -20,15 +20,14 @@ def _final_state(spark, store):
 
 def test_kill_resume_equals_uninterrupted(spark, world, tmp_path):
     s_full = SnapshotStore(str(tmp_path / "full"))
-    run_crawl(spark, world, s_full, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, s_full, pages_per_batch=2)
 
     s_killed = SnapshotStore(str(tmp_path / "killed"))
     with pytest.raises(InjectedFailure):
-        run_crawl(spark, world, s_killed, use_bloom=False, pages_per_batch=2,
-                  fail_after_batch=1)
+        run_crawl(spark, world, s_killed, pages_per_batch=2, fail_after_batch=1)
     assert s_killed.last_batch_id == 1
     # resume — picks up from the last committed snapshot
-    run_crawl(spark, world, s_killed, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, s_killed, pages_per_batch=2)
 
     assert _final_state(spark, s_full) == _final_state(spark, s_killed)
 
@@ -64,6 +63,27 @@ def test_store_atomic_commit_and_gc(spark, tmp_store):
     assert len(os.listdir(os.path.join(tmp_store, "t"))) == 1
 
 
+def test_resume_without_bloom_shards_rebuilds_them(spark, world, golden, tmp_path):
+    """A store with committed seen rows but no bloom_shards table (written
+    with the prefilter off) resumes exact: the shards are rebuilt from seen,
+    so no committed URL routes as definitely new."""
+    import json
+    import os
+
+    store = SnapshotStore(str(tmp_path / "no_shards"))
+    run_crawl(spark, world, store, max_batches=1)
+    path = os.path.join(store.root, SnapshotStore.MANIFEST)
+    with open(path) as f:
+        man = json.load(f)
+    del man["tables"]["bloom_shards"]
+    with open(path, "w") as f:
+        json.dump(man, f)
+    run_crawl(spark, world, store)
+    doc_ids = [r.doc_id for r in store.read(spark, "documents").collect()]
+    assert len(doc_ids) == len(set(doc_ids))
+    assert set(doc_ids) == set(golden.docs)
+
+
 def test_orphan_dirs_from_crashed_commit_are_ignored_and_gcd(spark, tmp_store):
     """A crash between data writes and the manifest swap leaves orphan
     version dirs; readers never see them and the next commit GCs them."""
@@ -84,7 +104,7 @@ def test_time_travel_append_tables(spark, world, tmp_path):
     """read_at_batch: documents as of window k equals what window k had
     committed (Iceberg snapshot-read semantics on the append deltas)."""
     store = SnapshotStore(str(tmp_path / "tt"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, store, pages_per_batch=2)
     assert store.last_batch_id >= 2
     full = store.read(spark, "documents").count()
     at1 = store.read_at_batch(spark, "documents", 1)

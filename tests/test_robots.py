@@ -82,8 +82,9 @@ def test_crawl_with_robots_from_corpus_keeps_parity(spark, world, golden, tmp_pa
     from news_crawler_spark.sources.store import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "rfc_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8,
-              robots_from_corpus=True)
+    # no "robots" table: the crawl parses the dimension from the corpus
+    unparsed = {k: v for k, v in world.items() if k != "robots"}
+    run_crawl(spark, unparsed, store, pages_per_batch=8)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}

@@ -11,8 +11,6 @@ accumulators, so nodes are deduplicated by their smallest accumulator id.
 import time
 from collections import defaultdict
 
-import pytest
-
 from news_crawler_spark.plans.crawl import run_crawl
 from news_crawler_spark.sources.store import SnapshotStore
 
@@ -43,13 +41,10 @@ def _cached_probe_rdds(spark) -> list[str]:
             if "_maybe_seen(" in r.name()]
 
 
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_probe_evaluated_once_per_window_and_released(spark, world, tmp_path,
-                                                      seen_filter):
+def test_probe_evaluated_once_per_window_and_released(spark, world, tmp_path):
     sql = spark._jsparkSession.sharedState().statusStore()
     mark = max((e.executionId() for e in _seq(sql.executionsList())), default=-1)
     res = run_crawl(spark, world, SnapshotStore(str(tmp_path / "store")),
-                    seen_filter=seen_filter, n_bloom_shards=8,
                     pages_per_batch=1, max_batches=3)
     assert res.batches == 3
 

@@ -105,11 +105,31 @@ def test_crawl_foreach_batch_resumable(spark, world, tmp_path):
 
     # reference: an uninterrupted driver-loop run of the same windows
     ref_store = SnapshotStore(str(tmp_path / "ref_store"))
-    run_crawl(spark, world, ref_store, use_bloom=False, pages_per_batch=4,
+    run_crawl(spark, world, ref_store, pages_per_batch=4,
               max_batches=store.last_batch_id)
     a = {r.doc_id for r in store.read(spark, "documents").collect()}
     b = {r.doc_id for r in ref_store.read(spark, "documents").collect()}
     assert a == b
+
+
+def test_resume_after_foreach_batch_tick_accepts_each_url_once(spark, world, golden,
+                                                             tmp_path):
+    """A store opened by one streaming tick and resumed by the driver loop
+    accepts every URL once: every window maintains the Bloom shards, so a
+    resumed run's prefilter always covers the committed seen set."""
+    from news_crawler_spark.plans.crawl import run_crawl
+    from news_crawler_spark.sources.store import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "mixed_store"))
+    crawl_foreach_batch(spark, world, store, pages_per_batch=1)(None, 0)
+    assert store.last_batch_id == 1
+    run_crawl(spark, world, store)
+    rows = store.read(spark, "documents").collect()
+    doc_ids = [r.doc_id for r in rows]
+    assert len(doc_ids) == len(set(doc_ids))
+    assert set(doc_ids) == set(golden.docs)
+    order = [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)]
+    assert order == golden.order
 
 
 def test_politeness_token_bucket_state_across_triggers(spark, tmp_path):

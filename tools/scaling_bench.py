@@ -58,8 +58,7 @@ spark = get_spark(cores={cores}, shuffle_partitions={cores},
 world = read_world(spark, {world_dir!r})
 store = SnapshotStore({store_dir!r})
 t0 = time.time()
-res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch={K},
-                cache_corpus=True)
+res = run_crawl(spark, world, store, pages_per_batch={K}, cache_corpus=True)
 wall = time.time() - t0
 fetched = res.dispatched + res.accepted
 stages = {{}}
@@ -254,9 +253,8 @@ def render_md() -> None:
         "  stages; the crawl's widths are sized explicitly, so runtime",
         "  re-planning bought nothing and idled the pool between waves:",
         "  8-core wall 94.6 → 82.4 s, same accepted set (util 0.74 → 0.80);",
-        "  2-core arm unchanged. `NCS_LOOP_AQE=true` restores AQE; results",
-        "  are identical either way (asserted). Small windows keep AQE for",
-        "  its partition coalescing.",
+        "  2-core arm unchanged; results are identical either way",
+        "  (asserted). Small windows keep AQE for its partition coalescing.",
         "- **Serial per-window floor is the live lever.** Because the hi arm",
         "  is ~3× shorter, every second of serial driver work (job",
         "  scheduling, py4j plan building, commit submission) costs the hi",
